@@ -29,6 +29,54 @@ object Bench {
     else if (spreadB2 < 1.10 && driftMedian <= 1.05) "clean"
     else "contended"
 
+  /** Fixed-point decimal for the JSON artifacts. `Locale.ROOT`, not the
+    * JVM default: under a comma-decimal default (de_DE, fr_FR) the `f`
+    * interpolator writes `0,12345`, which is not JSON.
+    */
+  private[graft] def fixed(v: Double, digits: Int): String =
+    String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
+
+  private[graft] def fixedArray(vs: Seq[Double], digits: Int): String =
+    vs.map(fixed(_, digits)).mkString("[", ",", "]")
+
+  private def pct(sorted: Seq[Double], q: Double): Double =
+    sorted((q * (sorted.size - 1)).round.toInt)
+
+  /** The drift object of PERF_QUERIES.json: this run's per-query mins
+    * over the previous record's, ascending; "null" under 20 shared.
+    */
+  private[graft] def driftJson(ratios: Seq[(String, Double)], prevTotal: String,
+      prevMtime: String): String =
+    if (ratios.size < 20) "null" else {
+      val rs = ratios.map(_._2)
+      val edges = Seq(0.0, 0.5, 0.8, 0.9, 1.0, 1.1, 1.25, 1.5, 2.0)
+      val counts = edges.zip(edges.drop(1) :+ Double.MaxValue).map {
+        case (lo, hi) => rs.count(r => r >= lo && r < hi) }
+      val worst = ratios.takeRight(5).reverse.map { case (n, r) =>
+        s"""{"q": "$n", "ratio": ${fixed(r, 3)}}""" }.mkString("[", ",", "]")
+      s"""{"n_shared": ${rs.size}, "median": ${fixed(pct(rs, 0.5), 3)},
+    "p10": ${fixed(pct(rs, 0.1), 3)}, "p90": ${fixed(pct(rs, 0.9), 3)},
+    "prev_total_min_per_query_s": $prevTotal, "prev_file_mtime": "$prevMtime",
+    "hist_edges": ${edges.mkString("[", ",", "]")},
+    "hist_counts": ${counts.mkString("[", ",", "]")},
+    "worst": $worst}"""
+    }
+
+  /** The one JSON line on stdout. Per-query seconds are rounded to 5
+    * decimals (10 µs — far under the ~50 ms scheduling floor of any
+    * query here): full-precision doubles once pushed this line past the
+    * stdout tail a reader keeps, truncating it mid-line (VERDICT r16
+    * #2). PERF_QUERIES.json keeps full precision.
+    */
+  private[graft] def summaryLine(total: Double, results: Seq[(String, Double)],
+      failed: Seq[String], passTotals: Seq[Double], passLoads: Seq[Double],
+      secPerQuery: Double, gate: String, sfDir: String): String = {
+    val qs = results.map { case (k, v) => "\"" + k + "\":" + fixed(v, 5) }
+      .mkString("{", ",", "}")
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"pass_totals":${passTotals.mkString("[", ",", "]")},"pass_loadavg":${fixedArray(passLoads, 2)},"n_queries":${results.size},"sec_per_query":$secPerQuery,"gate":${gate.replaceAll("\n\\s*", " ")},"sf":"$sfDir"}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -170,22 +218,13 @@ object Bench {
     }
     // nPasses+1 samples: before pass 1, then after each pass (the 1-min
     // EMA lags, so the after-pass reading is the one that reflects it)
-    val loadsJson = passLoads.map(l => f"$l%.2f").mkString("[", ",", "]")
+    val loadsJson = fixedArray(passLoads.toSeq, 2)
     // min over SUCCESSFUL passes; -1 only if all failed, and failures
     // never deflate the summed total
     val results = names.map { n =>
       val ok = passes.map(_(n)).filter(_ >= 0)
       n -> (if (ok.nonEmpty) ok.min else -1.0)
     }
-    // per-query seconds rounded to 5 decimals (10 µs — far under the
-    // ~50 ms scheduling floor of any query here): round 16 lost the
-    // ENTIRE per-query round-over-round comparison because the
-    // full-precision doubles pushed this one line past the driver's
-    // stdout tail budget and it was truncated mid-line (VERDICT r16
-    // #2). PERF_QUERIES.json below keeps full precision.
-    def r5(v: Double): String = f"$v%.5f"
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + r5(v) }
-      .mkString("{", ",", "}")
     val failed = results.filter(_._2 < 0).map(_._1)
     // any failure makes the headline total unmissably broken (-1)
     // rather than silently smaller
@@ -208,30 +247,14 @@ object Bench {
     // was compared against instead of implying "the committed record".
     var driftMedian: Double = -1.0
     val drift = try {
-      val prevTotal = prevRecord._2
-      val prevMtime = prevRecord._3
       val ratios = names.flatMap { nm =>
         val now = results.toMap.apply(nm)
         prevMins.get(nm).collect {
           case p if p > 0.03 && now > 0 => nm -> now / p
         }
       }.sortBy(_._2)
-      if (ratios.size < 20) "null" else {
-        val rs = ratios.map(_._2)
-        def pct(q: Double) = rs((q * (rs.size - 1)).round.toInt)
-        driftMedian = pct(0.5)
-        val edges = Seq(0.0, 0.5, 0.8, 0.9, 1.0, 1.1, 1.25, 1.5, 2.0)
-        val counts = edges.zip(edges.drop(1) :+ Double.MaxValue).map {
-          case (lo, hi) => rs.count(r => r >= lo && r < hi) }
-        val worst = ratios.takeRight(5).reverse.map { case (n, r) =>
-          s"""{"q": "$n", "ratio": ${f"$r%.3f"}}""" }.mkString("[", ",", "]")
-        s"""{"n_shared": ${rs.size}, "median": ${f"${pct(0.5)}%.3f"},
-    "p10": ${f"${pct(0.1)}%.3f"}, "p90": ${f"${pct(0.9)}%.3f"},
-    "prev_total_min_per_query_s": $prevTotal, "prev_file_mtime": "$prevMtime",
-    "hist_edges": ${edges.mkString("[", ",", "]")},
-    "hist_counts": ${counts.mkString("[", ",", "]")},
-    "worst": $worst}"""
-      }
+      if (ratios.size >= 20) driftMedian = pct(ratios.map(_._2), 0.5)
+      driftJson(ratios, prevRecord._2, prevRecord._3)
     } catch { case e: Throwable =>
       // a nulled drift must say WHY, not swallow the cause (ADVICE r11)
       System.err.println(s"[bench] drift computation failed: $e")
@@ -265,7 +288,8 @@ object Bench {
     "window_adjusted_total_ratio": $adjRatio,
     "per_query_ratio_vs_baseline": ${if (secPerQuery >= 0) secPerQuery / 1.16 else -1.0},
     "window_quality": $windowQuality}"""
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"pass_totals":$passTotals,"pass_loadavg":$loadsJson,"n_queries":$n,"sec_per_query":$secPerQuery,"gate":${gate.replaceAll("\n\\s*", " ")},"sf":"$sfDir"}""")
+    println(summaryLine(total, results, failed, passes.map(totalOf).toSeq,
+      passLoads.toSeq, secPerQuery, gate, sfDir))
     // Persist the complete per-query record to the repo so the
     // driver's truncated stdout tail can never lose the evidence:
     // per-query min AND every raw pass time, plus the 2x-gate

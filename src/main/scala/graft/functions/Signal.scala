@@ -2,16 +2,18 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftShim
 import org.apache.spark.sql.types.DecimalType
 
 /** Signal/feature kernels from the reference, as pure Column
-  * expressions (whole-stage-codegen friendly — zero UDFs).
+  * expressions (whole-stage-codegen friendly — zero UDFs, zero
+  * higher-order functions: those are interpreted per element).
   *
   * Two independent reference specifications agree on the math: the
   * Node-RED JS nodes (FeatureEngineeringApproaches.md:20-38) and the
   * StarRocks in-load SQL (FeatureEngineeringApproaches.md:230-238).
   * Group forms operate on a scalar column under groupBy; array forms
-  * operate on an ArrayType column per-row via higher-order functions —
+  * operate on an ArrayType column per-row via native kernels —
   * mirroring the reference's two equivalent approaches
   * (FeatureEngineeringApproaches.md:263-276).
   */
@@ -44,10 +46,10 @@ object Signal {
   private def d(x: Column): Column = x.cast("double")
 
   /** Sum of squares of an array (spectral energy by Parseval,
-    * README.md:465). Sequential left fold — deterministic order.
+    * README.md:465). Sequential left fold — deterministic order; the
+    * native `VectorExpressions.sumsq` kernel.
     */
-  def arraySumSq(arr: Column): Column =
-    aggregate(transform(arr, x => d(x) * d(x)), lit(0.0), (acc, v) => acc + v)
+  def arraySumSq(arr: Column): Column = VectorExpressions.sumsq(arr)
 
   /** Array RMS: sqrt(array_avg(array_map(x -> x*x, arr))) —
     * FeatureEngineeringApproaches.md:230-232.
@@ -56,24 +58,29 @@ object Signal {
     sqrt(arraySumSq(arr) / size(arr))
 
   /** Array peak: array_max(array_map(abs, arr)) —
-    * FeatureEngineeringApproaches.md:233-235.
+    * FeatureEngineeringApproaches.md:233-235 — taken as the larger of
+    * |max| and |min|: the same value (nulls skipped, NaN largest, null
+    * when no element is non-null) from two built-in passes.
     */
   def arrayPeak(arr: Column): Column =
-    array_max(transform(arr, x => abs(d(x))))
+    greatest(abs(d(array_max(arr))), abs(d(array_min(arr))))
+
+  /** One-pass moments of an array: struct(sum, m2_sum, m4_sum,
+    * max_abs_dev), the sums of (x − mean)^k and max |x − mean| — see
+    * `VectorExpressions.SignalMoments`. Divide by `size(arr)` at the
+    * Column level to get the moments themselves.
+    */
+  def moments(arr: Column): Column =
+    GraftShim.column(VectorExpressions.SignalMoments(GraftShim.expression(arr)))
 
   /** Array population excess kurtosis (explicit moments) —
     * FeatureEngineeringApproaches.md:31-38 / 236-238.
     */
   def arrayKurtosis(arr: Column): Column = {
     val n = size(arr).cast("double")
-    val mean = aggregate(arr, lit(0.0), (a, v) => a + d(v)) / n
-    val m2 = aggregate(transform(arr, x => (d(x) - mean) * (d(x) - mean)),
-      lit(0.0), (a, v) => a + v) / n
-    val m4 = aggregate(
-      transform(arr, x => {
-        val c = d(x) - mean; c * c * c * c
-      }),
-      lit(0.0), (a, v) => a + v) / n
+    val m = moments(arr)
+    val m2 = m.getField("m2_sum") / n
+    val m4 = m.getField("m4_sum") / n
     m4 / (m2 * m2) - lit(3.0)
   }
 

@@ -1,11 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftshim.{GraftShim => ExpressionUtils}
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, FloatType, NumericType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, StructField, StructType}
 
 /** Native codegen'd vector kernels. The higher-order-function forms
   * (zip_with + aggregate) are CodegenFallback in Spark — interpreted,
@@ -126,6 +126,99 @@ object VectorExpressions {
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
+  }
+
+  /** The one-pass signal moments of an array, as
+    * struct(sum, m2_sum, m4_sum, max_abs_dev):
+    *   sum         = Σ x                  (pass 1)
+    *   mean        = sum / n
+    *   m2_sum      = Σ (x − mean)²        (pass 2)
+    *   m4_sum      = Σ (((x − mean)·(x − mean))·(x − mean))·(x − mean)
+    *   max_abs_dev = max |x − mean|, NaN largest; null when n = 0
+    * Every sum is a left fold from 0.0 over elements cast to double,
+    * the IEEE operation order of the `aggregate`/`transform` forms
+    * (mean = aggregate(x, 0.0, +) / n, then a fold of the centered
+    * terms; max_abs_dev is `array_max` over them), so results are
+    * bit-identical to those forms at O(n) compiled cost instead of
+    * re-evaluating the mean once per element. The only division in the
+    * kernel is the mean's (unused when n = 0): callers divide the sums
+    * by `size` at the Column level, which keeps Spark's Divide
+    * semantics for an empty array under ANSI on or off.
+    * A null input or a null element yields null, like the folds.
+    */
+  case class SignalMoments(child: Expression) extends UnaryExpression {
+    override def dataType: DataType = SignalMoments.Type
+    override def nullIntolerant: Boolean = true
+    override def nullable: Boolean = true
+
+    override def nullSafeEval(v: Any): Any = {
+      val a = v.asInstanceOf[ArrayData]
+      val et = elemType(child.dataType)
+      val n = a.numElements()
+      var sum = 0.0; var i = 0
+      while (i < n) {
+        if (a.isNullAt(i)) return null
+        sum += toDouble(et, a, i)
+        i += 1
+      }
+      val mean = sum / n
+      var m2 = 0.0; var m4 = 0.0; var maxDev = Double.NaN
+      i = 0
+      while (i < n) {
+        val c = toDouble(et, a, i) - mean
+        m2 += c * c
+        m4 += c * c * c * c
+        val dev = math.abs(c)
+        if (i == 0 || (!maxDev.isNaN && (dev.isNaN || dev > maxDev))) maxDev = dev
+        i += 1
+      }
+      new GenericInternalRow(Array[Any](sum, m2, m4, if (n == 0) null else maxDev))
+    }
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val et = elemType(child.dataType)
+      nullSafeCodeGen(ctx, ev, a => {
+        val i = ctx.freshName("i"); val n = ctx.freshName("n")
+        val sum = ctx.freshName("sum"); val mean = ctx.freshName("mean")
+        val m2 = ctx.freshName("m2"); val m4 = ctx.freshName("m4")
+        val c = ctx.freshName("c"); val dev = ctx.freshName("dev")
+        val maxDev = ctx.freshName("maxDev")
+        s"""
+           |int $n = $a.numElements();
+           |double $sum = 0.0;
+           |for (int $i = 0; $i < $n; $i++) {
+           |  if ($a.isNullAt($i)) { ${ev.isNull} = true; break; }
+           |  $sum += ${getter(et, a, i)};
+           |}
+           |if (!${ev.isNull}) {
+           |  double $mean = $sum / $n;
+           |  double $m2 = 0.0; double $m4 = 0.0; double $maxDev = Double.NaN;
+           |  for (int $i = 0; $i < $n; $i++) {
+           |    double $c = ${getter(et, a, i)} - $mean;
+           |    $m2 += $c * $c;
+           |    $m4 += $c * $c * $c * $c;
+           |    double $dev = java.lang.Math.abs($c);
+           |    if ($i == 0 || (!Double.isNaN($maxDev) && (Double.isNaN($dev) || $dev > $maxDev))) {
+           |      $maxDev = $dev;
+           |    }
+           |  }
+           |  ${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+           |    new Object[] {$sum, $m2, $m4, $n == 0 ? null : (Object) $maxDev});
+           |}
+         """.stripMargin
+      })
+    }
+
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(child = newChild)
+  }
+
+  object SignalMoments {
+    val Type: StructType = StructType(Seq(
+      StructField("sum", DoubleType, nullable = false),
+      StructField("m2_sum", DoubleType, nullable = false),
+      StructField("m4_sum", DoubleType, nullable = false),
+      StructField("max_abs_dev", DoubleType, nullable = true)))
   }
 
   def dot(a: Column, b: Column): Column =

@@ -11,10 +11,15 @@ import graft.ml.Fft
   * fully-processed nested record of README.md:501-539 (FIXTURES.md §B4
   * schema golden).
   *
-  * One narrow Spark pipeline: no shuffle, whole plan fuses into a
-  * single WholeStageCodegen span (plus the one UDF for FFT). The same
-  * code runs on batch DataFrames and Structured Streaming frames —
-  * that is the point of declaring it on the DataFrame API.
+  * One narrow Spark pipeline: no shuffle. Every array computation is a
+  * codegen'd native kernel or built-in (`Signal.moments`, `sumsq`,
+  * `array_max`/`array_min`), O(n) per record; the two FFT UDFs are the
+  * only interpreted calls. No higher-order function
+  * (`transform`/`aggregate`) may appear here: Spark interprets those
+  * per element, and one that re-evaluates a fold inside its lambda
+  * makes a record O(n²) (EnrichPlanSpec guards this). The same code
+  * runs on batch DataFrames and Structured Streaming frames — that is
+  * the point of declaring it on the DataFrame API.
   *
   * Expected input columns: an ArrayType(Double) signal column, an
   * event-time timestamp column, and a status string column.
@@ -27,15 +32,15 @@ object Enrich {
     * signal's extremes against its own mean/stddev; is_valid mirrors
     * the reference's `return null` drop semantics (filter downstream).
     * outlier_score = fraction-like score in [0,1] from the max |z|.
+    * The sums come from the one-pass `Signal.moments` kernel; the
+    * divisions by n stay here, so an empty signal follows Spark's
+    * Divide (DIVIDE_BY_ZERO under ANSI, else valid with score 0).
     */
   def outlierCheck(signal: Column): Column = {
     val n = size(signal).cast("double")
-    val mean = aggregate(signal, lit(0.0), (a, v) => a + v) / n
-    val varr = aggregate(transform(signal, x => (x - mean) * (x - mean)),
-      lit(0.0), (a, v) => a + v) / n
-    val sd = sqrt(varr)
-    val maxAbsZ = when(sd > 0,
-      array_max(transform(signal, x => abs(x - mean))) / sd).otherwise(lit(0.0))
+    val m = Signal.moments(signal)
+    val sd = sqrt(m.getField("m2_sum") / n)
+    val maxAbsZ = when(sd > 0, m.getField("max_abs_dev") / sd).otherwise(lit(0.0))
     struct(
       (maxAbsZ <= 4.0).as("is_valid"),
       round(least(maxAbsZ / lit(10.0), lit(1.0)), 4).as("outlier_score"))
@@ -46,8 +51,8 @@ object Enrich {
     * spectral_energy.
     */
   def features(signal: Column, sampleRateHz: Double): Column = {
-    val rms = sqrt(Signal.arraySumSq(signal) / size(signal))
-    val peak = array_max(transform(signal, x => abs(x)))
+    val rms = Signal.arrayRms(signal)
+    val peak = Signal.arrayPeak(signal)
     val ptp = array_max(signal) - array_min(signal)
     struct(
       struct(

@@ -38,12 +38,13 @@ object Pipeline {
   def start(telemetry: DataFrame, lakePath: String, featuresPath: String,
       dlqPath: String, checkpointRoot: String,
       sampleRateHz: Double = 2000.0): Running = {
-    // leg 1 — enrichment → lake, partitioned machine/day (the
-    // machine/year/month layout, README.md:545-553)
+    // one enrichment frame; each leg's query plans (and prunes) its
+    // own copy of it
     val enriched = Enrich.pipeline(telemetry, "signal", "ts", "status",
       sampleRateHz)
-      .withColumn("day", to_date(col("ts")))
-    val lakeQ = enriched.writeStream
+    // leg 1 — enrichment → lake, partitioned machine/day (the
+    // machine/year/month layout, README.md:545-553)
+    val lakeQ = enriched.withColumn("day", to_date(col("ts"))).writeStream
       .format("parquet")
       .partitionBy("machine", "day")
       .option("path", lakePath)
@@ -52,8 +53,7 @@ object Pipeline {
       .start()
     // leg 2 — valid rows only (the reference drops invalid before
     // features, README.md:434-436) → windowed 9-feature rows
-    val valid = Enrich.pipeline(telemetry, "signal", "ts", "status", sampleRateHz)
-      .filter(col("outlier_check.is_valid"))
+    val valid = enriched.filter(col("outlier_check.is_valid"))
       .select(col("machine"), col("ts"),
         col("features.time_domain.rms").as("rms_in"))
     val features = Streaming.windowedFeatures(valid, "ts", "machine", "rms_in",
@@ -76,8 +76,7 @@ object Pipeline {
     // path; this sink is the retry/dead-letter topic only.
     implicit val s: SparkSession = telemetry.sparkSession
     import s.implicits._
-    val attempts = Enrich.pipeline(telemetry, "signal", "ts", "status",
-        sampleRateHz)
+    val attempts = enriched
       .select(col("id"), col("outlier_check.is_valid").as("ok"),
         col("machine").as("payload"), unix_millis(col("ts")).as("atMillis"))
       .as[Streaming.Attempt]

@@ -58,6 +58,56 @@ import org.apache.spark.sql.SparkSession
   *   write/read crosses the network, so 38% fewer bytes is the §6
   *   win with no local cost; values are codec-transparent, every
   *   query stays oracle-gated.
+  *
+  * The last three entries take the fixed per-batch cost out of the
+  * streaming `Pipeline` (a telemetry replay of 16 envelopes in 13
+  * micro-batches, measured with JFR and Spark's `CodegenMetrics` on a
+  * 4-vCPU host; PERF.md §1l has the recipe). Each is also right for
+  * batch sessions: it changes neither plans nor results.
+  *
+  * - `spark.sql.streaming.checkpointFileManagerClass` =
+  *   `FileSystemBasedCheckpointFileManager`: Spark's default
+  *   FileContext-based manager makes Hadoop's local file system start
+  *   an operating-system process when it has no native library: a
+  *   `readlink` for every rename (`getFileLinkStatus`) and a `chmod`
+  *   for every temp file created with a permission. Every offset-log
+  *   and commit-log entry, file-sink `_spark_metadata` entry and
+  *   state-store delta and checksum file is such a commit: about 1,400
+  *   spawns per replay (1,040 `readlink`, 357 `chmod`). The FileSystem
+  *   manager is Spark's own fallback and needs no `readlink`. It keeps
+  *   the guarantees: on `file:` FileContext's no-overwrite rename is
+  *   itself a check followed by a rename, and on HDFS
+  *   `FileSystem.rename` refuses an existing destination, so the
+  *   offset log's guard against a second writer holds
+  *   (CheckpointManagerSpec pins the no-overwrite commit and an
+  *   exactly-once restart under it). Measured: `readlink` spawns
+  *   1,040 → 0 per replay, the legs' traced `commit_ms` per replay
+  *   lake 640 → 142, features 677 → 163, dlq 591 → 239.
+  *
+  * - `spark.sql.artifact.isolation.enabled` = false: with isolation
+  *   every session has its own executor class loader, and a streaming
+  *   query runs in a clone of its session, so every `Pipeline.start`
+  *   (every `Trigger.AvailableNow` run) got a new loader. The codegen
+  *   cache is keyed by (class loader, source), so every stage body
+  *   that was already compiled missed it again on every start. The
+  *   library adds no session artifacts (jars, files), so isolation
+  *   buys it nothing. A session reads this conf once, when it first
+  *   runs a query: a runtime `spark.conf.set` leaves a session that is
+  *   in use isolated, so it belongs in the builder (Round16Spec pins
+  *   both).
+  *
+  * - `spark.sql.codegen.useIdInClassName` = false: the whole-stage
+  *   codegen stage id is part of the generated class name, and the
+  *   features leg's aggregate stage gets a different id from batch to
+  *   batch, so every batch missed the cache. Without the id, identical
+  *   stage bodies share one compiled class; plan strings still carry
+  *   the id.
+  *
+  *   Together with `Enrich`'s per-batch timestamp moved out of the
+  *   generated source (`VectorExpressions.batchTimestamp`), Janino
+  *   compiles per replay fall from 62 to 6, which are Spark's own
+  *   watermark-eviction predicates, and HotSpot's JIT time during a
+  *   replay from 18.9 s to 13.0 s.
   */
 object HarnessConf {
   val common: Seq[(String, String)] = Seq(
@@ -66,7 +116,11 @@ object HarnessConf {
     "spark.sql.autoBroadcastJoinThreshold" -> "67108864",
     "spark.sql.codegen.cache.maxEntries" -> "8192",
     "spark.sql.parquet.compression.codec" -> "zstd",
-    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true")
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager",
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    "spark.sql.codegen.useIdInClassName" -> "false")
 
   def apply(b: SparkSession.Builder): SparkSession.Builder =
     common.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }

@@ -1,9 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.functions.current_timestamp
 import org.apache.spark.sql.graftshim.{GraftShim => ExpressionUtils}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, StructField, StructType}
 
@@ -220,6 +223,51 @@ object VectorExpressions {
       StructField("m4_sum", DoubleType, nullable = false),
       StructField("max_abs_dev", DoubleType, nullable = true)))
   }
+
+  /** A per-execution constant that stays out of the generated source.
+    * A constant child (the Literal the optimizer makes of a query's
+    * `current_timestamp()`, or of a micro-batch's
+    * `CurrentBatchTimestamp`) is normally inlined into whole-stage
+    * codegen source, so every micro-batch, and every `foreachBatch`
+    * write, compiles a fresh class for the same operators. This wrapper
+    * is not foldable, so the optimizer leaves it in place; its
+    * generated code reads the child's value from the stage's
+    * `references` array, so the source, and with it the compiled class,
+    * is the same on every execution while the value is still one per
+    * execution. A child that is not constant by code-generation time
+    * generates its own code: the wrapper never changes a value. It is
+    * an ordinary codegen expression, not a `CodegenFallback`, which
+    * would take its whole projection out of whole-stage codegen.
+    */
+  case class BatchConstant(child: Expression) extends UnaryExpression {
+    override def dataType: DataType = child.dataType
+    override def nullable: Boolean = child.nullable
+    override def foldable: Boolean = false
+
+    override def eval(input: InternalRow): Any = child.eval(input)
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      if (!child.foldable) child.genCode(ctx)
+      else {
+        val ref = ctx.addReferenceObj("batchConstant", child.eval(),
+          CodeGenerator.boxedType(dataType))
+        ev.copy(code = code"""
+          |boolean ${ev.isNull} = $ref == null;
+          |${CodeGenerator.javaType(dataType)} ${ev.value} = ${ev.isNull} ?
+          |  ${CodeGenerator.defaultValue(dataType)} : $ref;
+         """.stripMargin)
+      }
+
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(child = newChild)
+  }
+
+  /** `current_timestamp()`, one value per query execution (per
+    * micro-batch in a stream), read through [[BatchConstant]] so the
+    * generated code does not change from batch to batch.
+    */
+  def batchTimestamp(): Column =
+    ExpressionUtils.column(BatchConstant(ExpressionUtils.expression(current_timestamp())))
 
   def dot(a: Column, b: Column): Column =
     ExpressionUtils.column(DotProduct(

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.Signal
+import graft.functions.{Signal, VectorExpressions}
 import graft.ml.Fft
 
 /** The reference's record-enrichment pipeline (§3.1): four chained
@@ -13,8 +13,8 @@ import graft.ml.Fft
   *
   * One narrow Spark pipeline: no shuffle. Every array computation is a
   * codegen'd native kernel or built-in (`Signal.moments`, `sumsq`,
-  * `array_max`/`array_min`), O(n) per record; the two FFT UDFs are the
-  * only interpreted calls. No higher-order function
+  * `array_max`/`array_min`), O(n) per record; the dominant-frequency
+  * FFT UDF is the only interpreted call. No higher-order function
   * (`transform`/`aggregate`) may appear here: Spark interprets those
   * per element, and one that re-evaluates a fold inside its lambda
   * makes a record O(n²) (EnrichPlanSpec guards this). The same code
@@ -48,7 +48,11 @@ object Enrich {
 
   /** Stage 2 — signal features (README.md:451-470): time-domain
     * rms/peak/peak-to-peak/crest + frequency-domain dominant_freq and
-    * spectral_energy.
+    * spectral_energy. The spectral energy Σ|X(k)|²/n equals Σx² by
+    * Parseval, so it is the O(n) `sumsq` kernel, not a second FFT per
+    * record; it agrees with `Fft.spectralEnergy` to rounding (a few
+    * ulps; EnrichMlSpec holds it to 1e-12 relative) and, like the other
+    * native kernels, reads null for a null element.
     */
   def features(signal: Column, sampleRateHz: Double): Column = {
     val rms = Signal.arrayRms(signal)
@@ -62,12 +66,15 @@ object Enrich {
         (peak / rms).as("crest_factor")).as("time_domain"),
       struct(
         Fft.dominant_freq(signal, lit(sampleRateHz)).as("dominant_freq"),
-        Fft.spectral_energy(signal).as("spectral_energy")).as("frequency_domain"))
+        VectorExpressions.sumsq(signal).as("spectral_energy")).as("frequency_domain"))
   }
 
   /** Stage 4 — quality metrics (README.md:485-499): completeness =
     * fraction of required fields present, consistency flag, version +
-    * processing timestamp stamps.
+    * processing timestamp stamps. The timestamp is one value per query
+    * execution (per micro-batch in a stream), kept out of the generated
+    * code by `VectorExpressions.batchTimestamp`, so a stream's enrichment
+    * stage compiles once, not once per batch.
     */
   def qualityMetrics(requiredCols: Seq[Column], consistency: Column): Column = {
     val present = requiredCols.map(c => when(c.isNull, 0.0).otherwise(1.0))
@@ -78,7 +85,7 @@ object Enrich {
       round((completeness + consistency.cast("double")) / 2.0, 4)
         .as("data_quality_score"),
       lit(ProcessingVersion).as("processing_version"),
-      current_timestamp().as("processing_timestamp"))
+      VectorExpressions.batchTimestamp().as("processing_timestamp"))
   }
 
   /** Full pipeline: raw frame + signal column → enriched nested record

@@ -22,6 +22,13 @@ import graft.operators.Enrich
   *
   * Expected input columns: id, ts (event time), machine, status,
   * signal (array<double>) — the B2 batch-form message.
+  *
+  * Build the session that runs it through `graft.HarnessConf`. Its
+  * checkpoint-manager conf keeps the legs' checkpoint commits from
+  * starting a process per file, and its artifact-isolation and
+  * class-name confs let every start and every micro-batch reuse the
+  * classes already compiled (without them each `start` recompiles
+  * every stage).
   */
 object Pipeline {
 

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import graft.functions.Signal
+import graft.functions.{Signal, VectorExpressions}
 
 /** Structured Streaming surface (SURVEY.md §2.7, T1-T8). Every
   * transform is the SAME DataFrame program as its batch twin — the
@@ -61,13 +61,15 @@ object Streaming {
 
   /** Split a frame on a validity predicate; invalid rows become DLQ
     * records wrapping the original payload (README.md:383-388 contract:
-    * original_message + error_count + last_error_time).
+    * original_message + error_count + last_error_time). The error time
+    * is `batchTimestamp()`: one value per write, and the same generated
+    * code for every epoch's write in [[routeToSinks]].
     */
   def dlqRecord(df: DataFrame, errorCount: Int = 1): DataFrame =
     df.select(
       to_json(struct(df.columns.toIndexedSeq.map(col): _*)).as("original_message"),
       lit(errorCount).as("error_count"),
-      current_timestamp().as("last_error_time"))
+      VectorExpressions.batchTimestamp().as("last_error_time"))
 
   /** foreachBatch fan-out: valid rows → processed path, invalid (or
     * NULL-validity — never silently dropped) → DLQ path. Each epoch

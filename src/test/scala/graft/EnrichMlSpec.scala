@@ -32,6 +32,33 @@ class EnrichMlSpec extends SparkSpec {
     assert(math.abs(Fft.spectralEnergy(xs) - direct) / direct < 1e-12)
   }
 
+  test("Enrich spectral_energy (sumsq, by Parseval) equals the FFT form to 1e-12 relative on telemetry-shaped signals") {
+    // integer sinusoids plus noise at the telemetry lengths (zero-padded
+    // to 1024 or 2048 by the FFT), with and without a 20x spike, and
+    // short signals (an empty one fails the rms in the same struct)
+    val rnd = new scala.util.Random(20260418L)
+    val telemetry = for {
+      n <- Seq(1000, 1080, 1118, 1323)
+      spike <- Seq(false, true)
+    } yield {
+      val a = 100 + rnd.nextInt(900); val f = 20.0 + rnd.nextInt(400)
+      val ph = rnd.nextDouble() * 2 * math.Pi
+      val s = Array.tabulate(n)(t => math.round(a * math.sin(2 * math.Pi * f * t / 2000.0 + ph) +
+        (rnd.nextDouble() - 0.5) * 0.4 * a).toDouble)
+      if (spike) s(rnd.nextInt(n)) = 20.0 * a
+      s.toSeq
+    }
+    val signals = telemetry ++ Seq(Seq(3.0), Seq(-2.0, 5.0), Seq.fill(7)(2.5))
+    val got = signals.toDF("signal")
+      .select(Enrich.features($"signal", 2000.0)
+        .getField("frequency_domain").getField("spectral_energy"))
+      .as[Double].collect().toSeq
+    signals.zip(got).foreach { case (xs, now) =>
+      val fft = Fft.spectralEnergy(xs)
+      assert(math.abs(now - fft) <= 1e-12 * math.abs(fft), s"n=${xs.size}: $now vs FFT $fft")
+    }
+  }
+
   test("FFT column functions work in a DataFrame") {
     val n = 64; val fs = 64.0
     val sine = (0 until n).map(i => math.sin(2 * math.Pi * 8.0 * i / fs))

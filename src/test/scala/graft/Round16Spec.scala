@@ -59,6 +59,13 @@ class Round16Spec extends SparkSpec {
     assert(m("spark.sql.codegen.cache.maxEntries") == "8192")
     assert(m("spark.sql.autoBroadcastJoinThreshold") == "67108864")
     assert(m("spark.sql.session.timeZone") == "UTC")
+    // the streaming Pipeline's per-batch cost: checkpoint commits that
+    // start no process, and compiled classes reused across query
+    // starts and micro-batches (HarnessConf scaladoc)
+    assert(m("spark.sql.streaming.checkpointFileManagerClass") ==
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
+    assert(m("spark.sql.artifact.isolation.enabled") == "false")
+    assert(m("spark.sql.codegen.useIdInClassName") == "false")
     // and the structure: every harness entrypoint builds its session
     // THROUGH HarnessConf — no entrypoint re-declares the keys
     // locally, where one copy could drift from the others
@@ -199,5 +206,46 @@ class Round16Spec extends SparkSpec {
     // that for its arms); assert the modifiability split explicitly
     assert(spark.conf.isModifiable("spark.sql.autoBroadcastJoinThreshold"))
     assert(!spark.conf.isModifiable("spark.sql.codegen.cache.maxEntries"))
+  }
+
+  test("HarnessConf artifact isolation takes effect only at builder time") {
+    import org.apache.spark.sql.{DataFrame, SparkSession}
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    val key = "spark.sql.artifact.isolation.enabled"
+    assert(HarnessConf.common.toMap.apply(key) == "false")
+    // the class loader a task runs under; an isolated session has its own
+    def loaderOf(df: DataFrame): Int = df.mapPartitions(_ =>
+      Iterator(System.identityHashCode(Thread.currentThread.getContextClassLoader)))
+      .collect().head
+    def taskLoader(s: SparkSession): Int = loaderOf(s.range(1).toDF())
+    // a stream runs in a clone of its session: the loader of its batches
+    def streamLoader(s: SparkSession): Int = {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+      val in = MemoryStream[Int](s)
+      val q = in.toDF().writeStream.foreachBatch { (df: DataFrame, _: Long) =>
+        seen.add(loaderOf(df)); () }.start()
+      try { in.addData(1); q.processAllAvailable() } finally q.stop()
+      seen.peek()
+    }
+    // the shared test session is built without the conf: isolated
+    val isolated = taskLoader(spark)
+    assert(taskLoader(spark.newSession()) != isolated)
+    // a runtime set leaves the session that is in use isolated
+    spark.conf.set(key, "false")
+    try assert(taskLoader(spark) == isolated)
+    finally spark.conf.unset(key)
+    // set in the builder, the session, its streams and its new sessions
+    // share one loader, so their compiled classes are shared too
+    val built = SparkSession.builder().config(key, "false").create()
+    try {
+      val shared = taskLoader(built)
+      assert(shared != isolated)
+      assert(streamLoader(built) == shared && streamLoader(built) == shared)
+      assert(taskLoader(built.newSession()) == shared)
+    } finally {
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
   }
 }

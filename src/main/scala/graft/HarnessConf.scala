@@ -59,7 +59,7 @@ import org.apache.spark.sql.SparkSession
   *   win with no local cost; values are codec-transparent, every
   *   query stays oracle-gated.
   *
-  * The last three entries take the fixed per-batch cost out of the
+  * The last four entries take the fixed per-batch cost out of the
   * streaming `Pipeline` (a telemetry replay of 16 envelopes in 13
   * micro-batches, measured with JFR and Spark's `CodegenMetrics` on a
   * 4-vCPU host; PERF.md §1l has the recipe). Each is also right for
@@ -74,7 +74,10 @@ import org.apache.spark.sql.SparkSession
   *   and commit-log entry, file-sink `_spark_metadata` entry and
   *   state-store delta and checksum file is such a commit: about 1,400
   *   spawns per replay (1,040 `readlink`, 357 `chmod`). The FileSystem
-  *   manager is Spark's own fallback and needs no `readlink`. It keeps
+  *   manager is Spark's own fallback and needs no `readlink`; its temp
+  *   files are created with a permission too, so under it every commit
+  *   still ran `chmod` (the `fs.file.impl` entry below removes those,
+  *   for every local write). It keeps
   *   the guarantees: on `file:` FileContext's no-overwrite rename is
   *   itself a check followed by a rename, and on HDFS
   *   `FileSystem.rename` refuses an existing destination, so the
@@ -83,6 +86,27 @@ import org.apache.spark.sql.SparkSession
   *   exactly-once restart under it). Measured: `readlink` spawns
   *   1,040 → 0 per replay, the legs' traced `commit_ms` per replay
   *   lake 640 → 142, features 677 → 163, dlq 591 → 239.
+  *
+  * - `spark.hadoop.fs.file.impl` = `graft.io.NioLocalFileSystem`:
+  *   without its native library, Hadoop's local file system sets a
+  *   permission by running `chmod`, and it sets one on every local file
+  *   or directory it creates, so a data file and its `.crc` sidecar
+  *   cost two processes: 10–14 ms per create against 0.15–0.17 ms
+  *   with `Files.setPosixFilePermissions` (300 creates in a standalone
+  *   JVM, 4-vCPU host). Under the checkpoint manager
+  *   above a telemetry replay still started 357 `chmod` (checkpoint
+  *   temp files, state-store delta and checksum files,
+  *   `_spark_metadata`, lake part files and their `.crc`), and a
+  *   `warehouse` run of set-up and two passes 864. `NioLocalFileSystem`
+  *   sets the same bits through `java.nio`; files and modes on disk are
+  *   unchanged (LocalFsSpec). Measured: `chmod` per replay 357 → 0
+  *   (CheckpointManagerSpec pins that a `Pipeline` run and restart
+  *   starts no process for its I/O), per warehouse run 864 → 0;
+  *   `tools/pipeline_jfr.sh` counts them. Caveat: the key
+  *   reaches the Hadoop conf only when this builder creates the
+  *   SparkContext, and `FileSystem.get` caches one `file:` instance per
+  *   JVM, so a JVM that already cached a stock `LocalFileSystem` keeps
+  *   using it.
   *
   * - `spark.sql.artifact.isolation.enabled` = false: with isolation
   *   every session has its own executor class loader, and a streaming
@@ -119,6 +143,7 @@ object HarnessConf {
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
     "spark.sql.streaming.checkpointFileManagerClass" ->
       "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager",
+    "spark.hadoop.fs.file.impl" -> "graft.io.NioLocalFileSystem",
     "spark.sql.artifact.isolation.enabled" -> "false",
     "spark.sql.codegen.useIdInClassName" -> "false")
 

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import scala.util.Try
 import graft.operators.Enrich
 
 /** The complete reference topology as ONE composition (SURVEY.md §3):
@@ -28,17 +29,33 @@ import graft.operators.Enrich
   * starting a process per file, and its artifact-isolation and
   * class-name confs let every start and every micro-batch reuse the
   * classes already compiled (without them each `start` recompiles
-  * every stage).
+  * every stage). Its `file:` file system (`graft.io.NioLocalFileSystem`)
+  * sets permissions without a `chmod` process, so no checkpoint,
+  * state-store or sink write starts one.
   */
 object Pipeline {
 
   case class Running(lake: StreamingQuery, features: StreamingQuery,
       dlq: StreamingQuery) {
-    def awaitAll(): Unit = {
-      lake.awaitTermination(); features.awaitTermination()
-      dlq.awaitTermination()
+    private def legs = Seq(lake, features, dlq)
+
+    /** Waits for every leg. When one fails, stops the others before
+      * rethrowing its error, so no leg outlives the call.
+      */
+    def awaitAll(): Unit =
+      try legs.foreach(_.awaitTermination())
+      catch { case e: Throwable => stopEach().foreach(e.addSuppressed); throw e }
+
+    /** Stops every leg, even when one fails to stop (`stop` throws
+      * `TimeoutException`), and then rethrows the first failure.
+      */
+    def stopAll(): Unit = stopEach() match {
+      case first +: rest => rest.foreach(first.addSuppressed); throw first
+      case _ =>
     }
-    def stopAll(): Unit = { lake.stop(); features.stop(); dlq.stop() }
+
+    private def stopEach(): Seq[Throwable] =
+      legs.flatMap(q => Try(q.stop()).failed.toOption)
   }
 
   /** Start all three legs over a streaming telemetry frame. */

@@ -2,18 +2,23 @@ package graft
 
 import java.nio.file.{Files, Path => JPath, Paths}
 import java.nio.file.attribute.FileTime
-import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import jdk.jfr.consumer.RecordingStream
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.{FileAlreadyExistsException, LocalFileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.functions._
 import graft.streaming.Pipeline
 
-/** The checkpoint manager `HarnessConf` selects (the FileSystem-based
-  * one, which starts no `readlink`/`chmod` process per commit) keeps
+/** The checkpoint manager and `file:` file system `HarnessConf` selects
+  * (the FileSystem-based manager, which starts no `readlink` process
+  * per commit, over `NioLocalFileSystem`, which starts no `chmod`) keep
   * the checkpoint guarantees: a `Pipeline` restarted part-way through
   * its input lands every lake and DLQ row exactly once and resumes its
   * state, on the default and on the RocksDB state store, and a
-  * no-overwrite commit onto an existing offset file still fails.
+  * no-overwrite commit onto an existing offset file still fails. Such a
+  * run and restart starts no operating-system process for its I/O.
   */
 class CheckpointManagerSpec extends SparkSpec {
   import spark.implicits._
@@ -29,8 +34,19 @@ class CheckpointManagerSpec extends SparkSpec {
     }
   }
 
+  /** The `file:` file system `impl` for the session's Hadoop confs. The
+    * `spark.hadoop.` key of `HarnessConf` reaches Hadoop only from a
+    * session builder, so here it goes in under its Hadoop name, with
+    * the per-JVM `FileSystem` cache off: that cache already holds the
+    * stock instance the shared session made.
+    */
+  private def withFileSystem[A](impl: String)(body: => A): A =
+    withConf("fs.file.impl" -> impl, "fs.file.impl.disable.cache" -> "true")(body)
+
+  private val HarnessFs = HarnessConf.common.toMap.apply("spark.hadoop.fs.file.impl")
+
   private def withHarnessManager[A](body: => A): A =
-    withConf(Key -> HarnessConf.common.toMap.apply(Key))(body)
+    withConf(Key -> HarnessConf.common.toMap.apply(Key))(withFileSystem(HarnessFs)(body))
 
   private val T0 = 1704067200000L // 2024-01-01T00:00:00Z
   private val Files4 = 4
@@ -82,16 +98,22 @@ class CheckpointManagerSpec extends SparkSpec {
   private def sorted(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
 
-  /** Reference run over all four files, then a run stopped after two
-    * files and restarted on the same checkpoint for the rest.
+  /** A run over the first two files, restarted on the same checkpoint
+    * for the other two; returns the working directory.
     */
-  private def restartSoak(): Unit = {
+  private def runAndRestart(): String = {
     val dir = Files.createTempDirectory("graft_ckpt_mgr_").toString
     writeInput(dir)
     (0 until 2).foreach(release(dir, _))
     runPipeline(dir, "restarted")
     (2 until Files4).foreach(release(dir, _))
     runPipeline(dir, "restarted")
+    dir
+  }
+
+  /** The restarted run against a reference run over all four files. */
+  private def restartSoak(): Unit = {
+    val dir = runAndRestart()
     runPipeline(dir, "reference")
 
     val lakeIds = spark.read.parquet(s"$dir/restarted/lake").select($"id")
@@ -140,5 +162,56 @@ class CheckpointManagerSpec extends SparkSpec {
       intercept[FileAlreadyExistsException](out.close())
       assert(Files.readAllBytes(first).sameElements(before), "offset file was overwritten")
     }
+  }
+
+  test("a Pipeline run and restart under the HarnessConf file system starts no process for its I/O") {
+    val stock = withConf(Key -> HarnessConf.common.toMap.apply(Key))(
+      withFileSystem(classOf[LocalFileSystem].getName)(processStarts(runAndRestart())))
+    assert(stock.exists(s => s.fromHadoop && s.command.startsWith("chmod")),
+      s"the probe sees the stock file system's chmod processes: ${stock.take(3)}")
+    val nio = withHarnessManager(processStarts(runAndRestart()))
+    // the shared test session keeps artifact isolation on (a HarnessConf
+    // session turns it off), so Spark deletes each stream's session
+    // artifact directory with `rm -rf`, and unloads the state stores of
+    // earlier RocksDB runs the same way; neither comes from a write
+    assert(nio.filterNot(_.sparkTempDelete).isEmpty,
+      s"${nio.size} processes started: ${nio.filterNot(_.sparkTempDelete).take(3)}")
+  }
+
+  /** Processes this JVM starts during `body`, from JFR's
+    * `jdk.ProcessStart` events.
+    */
+  private def processStarts(body: => Unit): Seq[CheckpointManagerSpec.Spawn] = {
+    val spawns = new ConcurrentLinkedQueue[CheckpointManagerSpec.Spawn]
+    val drained = new CountDownLatch(1)
+    val rs = new RecordingStream()
+    try {
+      rs.enable("jdk.ProcessStart").withStackTrace()
+      rs.enable(classOf[CheckpointManagerSpec.Drained]).withoutStackTrace()
+      rs.onEvent("jdk.ProcessStart", e => spawns.add(CheckpointManagerSpec.Spawn(
+        e.getString("command"),
+        e.getStackTrace.getFrames.asScala.map(_.getMethod.getType.getName).toSeq)))
+      rs.onEvent(classOf[CheckpointManagerSpec.Drained].getName, _ => drained.countDown())
+      rs.startAsync()
+      body
+      // the stream delivers events in time order: once this marker is
+      // seen, every process start before it has been too
+      new CheckpointManagerSpec.Drained().commit()
+      assert(drained.await(60, TimeUnit.SECONDS), "JFR stream delivered no marker")
+    } finally rs.close()
+    spawns.asScala.toSeq
+  }
+}
+
+object CheckpointManagerSpec {
+  /** Marks the end of a `processStarts` window in the JFR stream. */
+  class Drained extends jdk.jfr.Event
+
+  /** A process start: its command line and the classes on its stack. */
+  case class Spawn(command: String, callers: Seq[String]) {
+    def fromHadoop: Boolean = callers.exists(_.startsWith("org.apache.hadoop."))
+    /** Spark's recursive delete of one of its own temp directories. */
+    def sparkTempDelete: Boolean = command.startsWith("rm -rf ") &&
+      callers.contains("org.apache.spark.network.util.JavaUtils")
   }
 }

@@ -1,7 +1,11 @@
 package graft
 
-import java.nio.file.Files
+import java.lang.reflect.{Method, Proxy}
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.TimeoutException
+import scala.collection.mutable
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
 import graft.streaming.Pipeline
 
 /** End-to-end reference topology (SURVEY.md §3): file-backed telemetry
@@ -84,5 +88,45 @@ class PipelineSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dir/lake").count() == 122)
     assert(spark.read.parquet(s"$dir/features").count() == feats.count())
     assert(spark.read.parquet(s"$dir/dlq").count() == dlq.count())
+  }
+
+  test("awaitAll stops the other legs when one fails and rethrows that leg's error") {
+    val dir = Files.createTempDirectory("graft_pipe_fail_").toString
+    val src = s"$dir/src"
+    (0 until 64).map { i =>
+      (i.toLong, ts(f"2024-01-01 00:${i / 4}%02d:${(i % 4) * 15}%02d"), "M01", "Good",
+        Seq(10.0 + i, 11.0 + i, 9.0 + i, 20.0 + i))
+    }.toDF("id", "ts", "machine", "status", "signal")
+      .repartitionByRange(8, $"ts").write.parquet(src)
+    // a file where the lake leg's first partition directory goes: its
+    // first batch fails while the other legs have batches to run
+    Files.createDirectories(Paths.get(s"$dir/lake"))
+    Files.createFile(Paths.get(s"$dir/lake/machine=M01"))
+    val stream = spark.readStream.schema(spark.read.parquet(src).schema)
+      .option("maxFilesPerTrigger", "1").parquet(src)
+    val running = Pipeline.start(stream, s"$dir/lake", s"$dir/features",
+      s"$dir/dlq", s"$dir/cp")
+    val err = intercept[StreamingQueryException](running.awaitAll())
+    assert(running.lake.exception.contains(err))
+    assert(spark.streams.active.isEmpty, spark.streams.active.map(_.name).toSeq)
+  }
+
+  test("stopAll stops every leg when one fails to stop and rethrows the first failure") {
+    val stopped = mutable.Buffer[String]()
+    def leg(name: String, stops: Boolean): StreamingQuery = Proxy.newProxyInstance(
+      getClass.getClassLoader, Array(classOf[StreamingQuery]),
+      (_: AnyRef, m: Method, _: Array[AnyRef]) => m.getName match {
+        case "stop" =>
+          stopped += name
+          if (stops) null else throw new TimeoutException(s"$name did not stop")
+        case "toString" => name
+        case other => throw new UnsupportedOperationException(other)
+      }).asInstanceOf[StreamingQuery]
+    val running = Pipeline.Running(leg("lake", stops = true),
+      leg("features", stops = false), leg("dlq", stops = false))
+    val err = intercept[TimeoutException](running.stopAll())
+    assert(stopped == Seq("lake", "features", "dlq"))
+    assert(err.getMessage == "features did not stop")
+    assert(err.getSuppressed.map(_.getMessage).toSeq == Seq("dlq did not stop"))
   }
 }

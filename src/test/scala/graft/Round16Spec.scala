@@ -59,11 +59,12 @@ class Round16Spec extends SparkSpec {
     assert(m("spark.sql.codegen.cache.maxEntries") == "8192")
     assert(m("spark.sql.autoBroadcastJoinThreshold") == "67108864")
     assert(m("spark.sql.session.timeZone") == "UTC")
-    // the streaming Pipeline's per-batch cost: checkpoint commits that
-    // start no process, and compiled classes reused across query
-    // starts and micro-batches (HarnessConf scaladoc)
+    // the streaming Pipeline's per-batch cost: checkpoint commits and
+    // local writes that start no process, and compiled classes reused
+    // across query starts and micro-batches (HarnessConf scaladoc)
     assert(m("spark.sql.streaming.checkpointFileManagerClass") ==
       "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
+    assert(m("spark.hadoop.fs.file.impl") == "graft.io.NioLocalFileSystem")
     assert(m("spark.sql.artifact.isolation.enabled") == "false")
     assert(m("spark.sql.codegen.useIdInClassName") == "false")
     // and the structure: every harness entrypoint builds its session

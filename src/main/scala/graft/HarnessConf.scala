@@ -59,11 +59,11 @@ import org.apache.spark.sql.SparkSession
   *   win with no local cost; values are codec-transparent, every
   *   query stays oracle-gated.
   *
-  * The last four entries take the fixed per-batch cost out of the
+  * The last six entries take the fixed per-batch cost out of the
   * streaming `Pipeline` (a telemetry replay of 16 envelopes in 13
   * micro-batches, measured with JFR and Spark's `CodegenMetrics` on a
-  * 4-vCPU host; PERF.md §1l has the recipe). Each is also right for
-  * batch sessions: it changes neither plans nor results.
+  * 4-vCPU host; PERF.md §1l and §1m have the recipe). Each is also
+  * right for batch sessions: none changes a result.
   *
   * - `spark.sql.streaming.checkpointFileManagerClass` =
   *   `FileSystemBasedCheckpointFileManager`: Spark's default
@@ -129,9 +129,62 @@ import org.apache.spark.sql.SparkSession
   *
   *   Together with `Enrich`'s per-batch timestamp moved out of the
   *   generated source (`VectorExpressions.batchTimestamp`), Janino
-  *   compiles per replay fall from 62 to 6, which are Spark's own
-  *   watermark-eviction predicates, and HotSpot's JIT time during a
-  *   replay from 18.9 s to 13.0 s.
+  *   compiles per replay fall from 62 to 6, and HotSpot's JIT time
+  *   during a replay from 18.9 s to 13.0 s. Of the 6 (PERF.md §1l), 4
+  *   are the features leg's watermark-eviction predicates and 2 are the
+  *   DLQ leg's state serializer and deserializer.
+  *
+  * - `spark.plugins` = `graft.io.HadoopConfPlugin`: a Hadoop
+  *   `Configuration` records, for each property, the resources that
+  *   set it, and `Configuration.write` GZIPs that record property by
+  *   property. The session's Hadoop conf holds about 1,100 properties
+  *   (the core, mapred and yarn defaults), so a serialized copy was
+  *   113,520 bytes, 7.5–8.4 ms to write and 7.9–10.6 ms to read (warm
+  *   medians in the benchmark JVM after a telemetry replay), and Spark
+  *   ships one with every file scan's broadcast, every state-store RDD
+  *   and every write task. The plugin drops the records when the
+  *   SparkContext starts: 69,881 bytes, 0.9 ms to write, 1.6–1.9 ms to
+  *   read; `Configuration.write`/`readFields` fell from 8.5% to 5.1% of
+  *   a timed replay's Java samples. Keys and values are unchanged
+  *   (HadoopConfPluginSpec; the session's conf differs only by the two
+  *   keys of this entry and the next, which Spark copies into it like
+  *   every session conf). Caveats:
+  *   - it reads and clears a private field of Hadoop 3.4.2
+  *     (`Configuration.updatingResource`) by reflection; on a Hadoop
+  *     without that field it leaves the conf as it is;
+  *   - a default resource registered after start-up reloads every live
+  *     conf and brings the records back (correct, only slower again).
+  *     The plugin first loads `JobConf` and `HdfsConfiguration`, whose
+  *     class initializers register the mapred, yarn and hdfs defaults,
+  *     so none of those comes later;
+  *   - `spark.plugins` is one comma-separated list: a caller who sets it
+  *     replaces this entry and must keep `graft.io.HadoopConfPlugin` in
+  *     the list;
+  *   - diagnostics are lost: `Configuration.getPropertySources` returns
+  *     null for a property loaded from a resource, so Spark's
+  *     `SparkHadoopUtil.propertySources` (the source column of the
+  *     environment's Hadoop properties) is empty;
+  *   - like `fs.file.impl`, it acts only when this builder creates the
+  *     SparkContext.
+  *
+  * - `spark.sql.maxConcurrentOutputFileWriters` = 16: by default a
+  *   partitioned write (the `Pipeline`'s lake leg, by machine and day)
+  *   sorts each task's rows by partition before writing them, so that
+  *   one file is open at a time; `UnsafeExternalRowSorter` was 3.6% of
+  *   a timed replay's Java samples. With this key a task keeps a
+  *   parquet writer open per partition value and writes rows as they
+  *   come, up to 16 writers; from the 17th partition value on, Spark
+  *   sorts the task's remaining rows as before. The value is a memory
+  *   bound, not a partition count: each open writer holds its current
+  *   row group in the heap until it reaches `parquet.block.size`
+  *   (128 MB), and Parquet's `MemoryManager` shrinks every open writer's
+  *   row group only when together they pass `parquet.memory.pool.ratio`
+  *   (95%) of the heap, while the sort can spill. Sixteen caps a task
+  *   at sixteen such buffers; a task with more partition values still
+  *   writes them all, through the sort. Either way a task writes one
+  *   file per partition value: PipelineSpec checks that directories,
+  *   file counts and rows are the same at 16 and at 0, with a batch of
+  *   40 partition values.
   */
 object HarnessConf {
   val common: Seq[(String, String)] = Seq(
@@ -145,7 +198,9 @@ object HarnessConf {
       "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager",
     "spark.hadoop.fs.file.impl" -> "graft.io.NioLocalFileSystem",
     "spark.sql.artifact.isolation.enabled" -> "false",
-    "spark.sql.codegen.useIdInClassName" -> "false")
+    "spark.sql.codegen.useIdInClassName" -> "false",
+    "spark.plugins" -> "graft.io.HadoopConfPlugin",
+    "spark.sql.maxConcurrentOutputFileWriters" -> "16")
 
   def apply(b: SparkSession.Builder): SparkSession.Builder =
     common.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, Nondeterministic, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -268,6 +268,36 @@ object VectorExpressions {
     */
   def batchTimestamp(): Column =
     ExpressionUtils.column(BatchConstant(ExpressionUtils.expression(current_timestamp())))
+
+  /** An evaluation boundary: the child's value, computed once where the
+    * Project that holds it runs. The optimizer inlines a deterministic
+    * alias into every consumer it collapses a Project into and into
+    * every Filter it pushes below that Project, so an expensive child
+    * referenced k times is evaluated k times per row. A nondeterministic
+    * expression is neither inlined (`CollapseProject`) nor passed by a
+    * pushed-down predicate (`PushDownPredicates`), so every consumer
+    * reads the one materialized column. The value is the child's own: no
+    * state, no seed, and it generates exactly the child's code, so it
+    * adds nothing to a row's work.
+    */
+  case class Once(child: Expression) extends UnaryExpression with Nondeterministic {
+    override def dataType: DataType = child.dataType
+    override def nullable: Boolean = child.nullable
+    override def prettyName: String = "once"
+
+    override protected def initializeInternal(partitionIndex: Int): Unit = ()
+    override protected def evalInternal(input: InternalRow): Any = child.eval(input)
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      child.genCode(ctx)
+
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(child = newChild)
+  }
+
+  /** `c`, evaluated once per row however many consumers read it ([[Once]]). */
+  def once(c: Column): Column =
+    ExpressionUtils.column(Once(ExpressionUtils.expression(c)))
 
   def dot(a: Column, b: Column): Column =
     ExpressionUtils.column(DotProduct(

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import graft.functions.VectorExpressions.once
 
 /** Kafka source/sink wiring (reference S3/S4: consumer groups, offset
   * control, keyed JSON messages — README.md:197-209, 265-270;
@@ -49,9 +50,22 @@ object Kafka {
     * FeatureEngineeringApproaches.md:134-147). from_json is PERMISSIVE
     * (malformed → all-null struct), so validity = at least one pinned
     * field materialized; rows with none route to the DLQ split.
+    *
+    * The parse is an evaluation boundary (`VectorExpressions.once`).
+    * Without it the optimizer pushes the `__json_ok` filter, and a
+    * consumer's own filters (the features leg's `is_valid`), below the
+    * parse and inlines `from_json(value)` into every reference, so each
+    * `Pipeline` leg plan parsed every envelope 7 (lake, dlq) or 12
+    * (features) times, and the filter holding those parses, a
+    * `CodegenFallback`, ran outside whole-stage codegen. Behind the
+    * boundary one Project parses each envelope once, and the filters
+    * above it read the parsed column inside generated code
+    * (KafkaEnvelopeSpec pins both). The price: the optimizer can no
+    * longer prune the fields a consumer never reads out of the parse's
+    * schema, so every row parses all the pinned fields.
     */
   def parseJsonMessages(envelope: DataFrame, schema: StructType): DataFrame = {
-    val parsed = from_json(col("value").cast("string"), schema)
+    val parsed = once(from_json(col("value").cast("string"), schema))
     val anyField = schema.fieldNames
       .map(f => col("parsed").getField(f).isNotNull)
       .reduce(_ || _)

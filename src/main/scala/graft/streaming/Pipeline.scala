@@ -31,7 +31,10 @@ import graft.operators.Enrich
   * classes already compiled (without them each `start` recompiles
   * every stage). Its `file:` file system (`graft.io.NioLocalFileSystem`)
   * sets permissions without a `chmod` process, so no checkpoint,
-  * state-store or sink write starts one.
+  * state-store or sink write starts one. Its `HadoopConfPlugin` ships
+  * every task a Hadoop conf without per-property source records, and its
+  * concurrent-writer limit lets the lake leg write its partitions
+  * without sorting them first.
   */
 object Pipeline {
 

@@ -33,6 +33,61 @@ class KafkaEnvelopeSpec extends SparkSpec {
     assert(Kafka.validRecords(parsed).count() == 1)
     assert(Kafka.invalidJson(parsed).count() == 1)
     assert(Kafka.invalidJson(parsed).select($"key_str").as[String].head() == "2")
+    // edge shapes: only a value with at least one pinned field is valid
+    val edges = envelope(
+      ("ok", """{"id":1,"v":2.5,"status":"Good"}"""),
+      ("truncated", """{"id":1,"v":2.5,"sta"""),
+      ("empty-object", "{}"),
+      ("null", "null"),
+      ("array", """[{"id":1,"v":2.5,"status":"Good"}]"""),
+      ("unknown-fields", """{"foo":1,"bar":"x"}"""),
+      ("one-field", """{"status":"Good"}"""))
+    val edgesParsed = Kafka.parseJsonMessages(edges, schema)
+    def keys(df: org.apache.spark.sql.DataFrame, c: String) =
+      df.select(col(c)).as[String].collect().toSet
+    assert(keys(Kafka.validRecords(edgesParsed), "key") == Set("ok", "one-field"))
+    assert(keys(Kafka.invalidJson(edgesParsed), "key_str") ==
+      Set("truncated", "empty-object", "null", "array", "unknown-fields"))
+  }
+
+  test("each envelope is parsed once per plan, and the validity filter runs in generated code") {
+    import EnvelopeFiles.{parsedFiltersInCodegen, parses}
+    val dir = java.nio.file.Files.createTempDirectory("graft_env_plan_").toString
+    // a file scan, not a local relation the optimizer would evaluate away
+    envelope(("1", """{"id":1,"v":2.5,"status":"Good"}"""), ("2", """{not json at all"""))
+      .write.parquet(s"$dir/env")
+    val parsed = Kafka.parseJsonMessages(spark.read.parquet(s"$dir/env"), schema)
+    Seq(Kafka.validRecords(parsed), Kafka.invalidJson(parsed)).foreach { df =>
+      assert(df.count() == 1)
+      val plan = df.queryExecution.executedPlan
+      assert(parses(plan) == 1, plan)
+      val inCodegen = parsedFiltersInCodegen(plan)
+      assert(inCodegen.nonEmpty && inCodegen.forall(identity), plan)
+    }
+  }
+
+  test("every Pipeline leg over parsed envelopes parses each envelope once") {
+    import EnvelopeFiles.parses
+    val dir = java.nio.file.Files.createTempDirectory("graft_env_legs_").toString
+    val rec = (i: Int) => (i.toLong, java.sql.Timestamp.valueOf(f"2024-01-01 00:${i / 2}%02d:00"),
+      s"M0${i % 2}", "Good", Seq(1.0 + i, 2.0, 0.5, 3.0))
+    val files = (0 until 3).map { f =>
+      Kafka.toEnvelope((f * 8 until f * 8 + 8).map(rec)
+        .toDF("id", "ts", "machine", "status", "signal"), "id")
+    }
+    EnvelopeFiles.write(spark, s"$dir/src", files)
+    // data batches only, so each leg's last execution plans a read of its input
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark.conf.set(noData, "false")
+    val running = graft.streaming.Pipeline.start(EnvelopeFiles.validStream(spark, s"$dir/src"),
+      s"$dir/lake", s"$dir/features", s"$dir/dlq", s"$dir/cp")
+    try running.awaitAll() finally spark.conf.unset(noData)
+    Seq(running.lake, running.features, running.dlq).foreach { q =>
+      val plan = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.lastExecution.executedPlan
+      assert(parses(plan) == 1, plan)
+    }
+    assert(spark.read.parquet(s"$dir/lake").count() == 24)
   }
 
   test("toEnvelope round-trips through parse") {

@@ -67,6 +67,10 @@ class Round16Spec extends SparkSpec {
     assert(m("spark.hadoop.fs.file.impl") == "graft.io.NioLocalFileSystem")
     assert(m("spark.sql.artifact.isolation.enabled") == "false")
     assert(m("spark.sql.codegen.useIdInClassName") == "false")
+    // the per-execution cost of a micro-batch: Hadoop confs shipped
+    // without their source records, lake writes without a sort
+    assert(m("spark.plugins") == "graft.io.HadoopConfPlugin")
+    assert(m("spark.sql.maxConcurrentOutputFileWriters") == "16")
     // and the structure: every harness entrypoint builds its session
     // THROUGH HarnessConf — no entrypoint re-declares the keys
     // locally, where one copy could drift from the others

@@ -9,7 +9,16 @@
 #     time, each with the Spark class that asked for it (jdk.ClassDefine
 #     events of Janino's class loader, with their stacks);
 #   - HotSpot's JIT compile time (growth of jdk.CompilerStatistics'
-#     totalTimeSpent).
+#     totalTimeSpent);
+#   - the CPU time of the JVM's threads by group: C2 and C1 compiler
+#     threads, stream execution threads, executor task threads and the
+#     rest, read from /proc/<pid>/task/*/stat of this script's own JVM
+#     every 50 ms (a thread that ends between two reads loses at most
+#     50 ms of its CPU);
+#   - the share of JFR execution samples (jdk.ExecutionSample, every
+#     2 ms, Java threads only) whose stack holds Hadoop's
+#     Configuration.write/readFields, Spark's JsonToStructs or its
+#     UnsafeExternalRowSorter.
 # The timed replay runs from the workload's "warm-up done" line to its
 # "replay 0 done" line. The run writes only under a new temp directory,
 # named on the last line (keep it for `jfr print`, remove it after);
@@ -34,6 +43,7 @@ cat > "$w/events.jfc" <<'EOF'
   <event name="jdk.ProcessStart"><setting name="enabled">true</setting><setting name="stackTrace">false</setting></event>
   <event name="jdk.ClassDefine"><setting name="enabled">true</setting><setting name="stackTrace">true</setting></event>
   <event name="jdk.CompilerStatistics"><setting name="enabled">true</setting><setting name="period">1000 ms</setting></event>
+  <event name="jdk.ExecutionSample"><setting name="enabled">true</setting><setting name="period">2 ms</setting></event>
 </configuration>
 EOF
 
@@ -47,8 +57,56 @@ java -Xms3g -Xmx3g -Djava.io.tmpdir="$w/tmp" -Dspark.sql.session.timeZone=UTC "$
   -XX:FlightRecorderOptions:stackdepth=128 \
   -XX:StartFlightRecording=filename="$w/rec.jfr",settings="$w/events.jfc" \
   -cp "$(cat "$cpfile")" pipebench.Main \
-  --workload telemetry --seed "$seed" --reps 1 --trace 0 --work "$w" >"$w/out.txt" 2>"$w/err.txt" ||
-  { tail -20 "$w/err.txt" >&2; echo "telemetry run failed; logs: $w" >&2; exit 1; }
+  --workload telemetry --seed "$seed" --reps 1 --trace 0 --work "$w" >"$w/out.txt" 2>"$w/err.txt" &
+jvm=$!
+
+# CPU per thread group over the timed replay, from the JVM's /proc entries
+cat > "$w/thread_cpu.py" <<'EOF'
+import os, sys, time
+pid, log = sys.argv[1], sys.argv[2]
+tick = os.sysconf("SC_CLK_TCK")
+# thread names as /proc shows them: the first 15 characters
+GROUPS = [("C2 compiler", "C2 CompilerThre"), ("C1 compiler", "C1 CompilerThre"),
+          ("stream execution", "stream executio"), ("executor tasks", "Executor task l")]
+
+def threads():
+    out = {}
+    for tid in os.listdir(f"/proc/{pid}/task"):
+        try:
+            with open(f"/proc/{pid}/task/{tid}/stat") as f:
+                rest = f.read().rsplit(")", 1)[1].split()
+            with open(f"/proc/{pid}/task/{tid}/comm") as f:
+                name = f.read().strip()
+        except OSError:
+            continue
+        out[tid] = (name, (int(rest[11]) + int(rest[12])) / tick)  # utime + stime
+    return out
+
+def logged(text):
+    try:
+        with open(log) as f:
+            return text in f.read()
+    except OSError:
+        return False
+
+while not logged(" warm-up done\n"):
+    if not os.path.exists(f"/proc/{pid}"):
+        sys.exit(0)
+    time.sleep(0.05)
+start, last = threads(), {}
+while not logged(" replay 0 done in") and os.path.exists(f"/proc/{pid}"):
+    last.update(threads())
+    time.sleep(0.05)
+cpu = {}
+for tid, (name, s) in last.items():
+    group = next((g for g, prefix in GROUPS if name.startswith(prefix)), "the rest")
+    cpu[group] = cpu.get(group, 0.0) + s - start.get(tid, (name, 0.0))[1]
+print(f"thread CPU in the timed replay: {sum(cpu.values()):.2f} s")
+for g in [g for g, _ in GROUPS] + ["the rest"]:
+    print(f"  {cpu.get(g, 0.0):6.2f} s  {g}")
+EOF
+python3 "$w/thread_cpu.py" "$jvm" "$w/err.txt" >"$w/thread_cpu.txt" || true
+wait "$jvm" || { tail -20 "$w/err.txt" >&2; echo "telemetry run failed; logs: $w" >&2; exit 1; }
 
 # the window, from the workload's own timestamped progress lines
 t0=$(sed -n 's/^\[pipebench\] \([^ ]*\) warm-up done$/\1/p' "$w/err.txt")
@@ -71,7 +129,9 @@ public class JfrWindow {
   public static void main(String[] a) throws Exception {
     Instant from = Instant.parse(a[1]), to = Instant.parse(a[2]);
     Map<String, Integer> processes = new TreeMap<>(), generated = new TreeMap<>();
-    int compiles = 0;
+    int compiles = 0, samples = 0;
+    Map<String, Integer> under = new java.util.LinkedHashMap<>();
+    for (String k : MARKERS) under.put(k, 0);
     double jitFrom = Double.NaN, jitTo = Double.NaN;
     try (RecordingFile f = new RecordingFile(Path.of(a[0]))) {
       while (f.hasMoreEvents()) {
@@ -85,6 +145,11 @@ public class JfrWindow {
             if (!t.isAfter(to)) jitTo = s;
             break;
           }
+          case "jdk.ExecutionSample":
+            if (!in) break;
+            samples++;
+            for (String k : markers(e)) under.merge(k, 1, Integer::sum);
+            break;
           case "jdk.ProcessStart":
             if (in) processes.merge(e.getString("command").split(" ")[0], 1, Integer::sum);
             break;
@@ -108,6 +173,26 @@ public class JfrWindow {
     System.out.printf("Janino compiles: %d (classes defined, by the Spark class asking)%n", compiles);
     generated.forEach((c, n) -> System.out.printf("  %5d  %s%n", n, c));
     System.out.printf("HotSpot JIT time: %.1f s%n", jitTo - jitFrom);
+    System.out.printf("Java execution samples: %d; with on the stack:%n", samples);
+    final int n = Math.max(samples, 1);
+    under.forEach((k, c) -> System.out.printf("  %5d  %4.1f%%  %s%n", c, 100.0 * c / n, k));
+  }
+
+  static final String[] MARKERS = {
+      "Configuration.write/readFields", "JsonToStructs", "UnsafeExternalRowSorter"};
+
+  /** The markers with a frame on the sample's stack. */
+  static java.util.Set<String> markers(RecordedEvent e) {
+    java.util.Set<String> found = new java.util.HashSet<>();
+    if (e.getStackTrace() == null) return found;
+    for (RecordedFrame fr : e.getStackTrace().getFrames()) {
+      String c = fr.getMethod().getType().getName(), m = fr.getMethod().getName();
+      if (c.equals("org.apache.hadoop.conf.Configuration")
+          && (m.equals("write") || m.equals("readFields"))) found.add(MARKERS[0]);
+      else if (c.equals("org.apache.spark.sql.catalyst.expressions.JsonToStructs")) found.add(MARKERS[1]);
+      else if (c.endsWith(".UnsafeExternalRowSorter")) found.add(MARKERS[2]);
+    }
+    return found;
   }
 
   /** The first two Spark execution classes on the stack, each with its
@@ -127,4 +212,5 @@ public class JfrWindow {
 }
 EOF
 java "$w/JfrWindow.java" "$w/rec.jfr" "$t0" "$t1"
+cat "$w/thread_cpu.txt"
 echo "recording and logs: $w"
